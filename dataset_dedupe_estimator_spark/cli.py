@@ -239,7 +239,7 @@ def cmd_synthetic(args) -> int:
         update_columns=list(schema) if args.update_columns else None,
         edit_size=args.edit_size,
     )
-    original = finalize(tables["original"]).cache()
+    original = finalize(tables["original"])
     groups = {
         f"edit{i}-{name}": {"original": original, name: finalize(df)}
         for i, (name, df) in enumerate(t for t in tables.items() if t[0] != "original")

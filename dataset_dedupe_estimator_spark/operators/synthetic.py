@@ -159,12 +159,19 @@ class DataGenerator:
         return rng.mapInArrow(gen, ddl_schema)
 
     # -- edit operators (reference de/synthetic.py:15-50) -------------------
+    # Each public operator counts its input frame once; the private
+    # ``_``-prefixed forms take that row count ``n`` instead, so a caller
+    # that already knows it (generate_synthetic_tables) launches no job.
 
     def delete_rows(
         self, df: DataFrame, edit_points: list[float], edit_size: int = 10
     ) -> DataFrame:
         """Remove ``edit_size`` rows just before each relative edit point."""
-        n = df.count()
+        return self._delete_rows(df, df.count(), edit_points, edit_size)
+
+    def _delete_rows(
+        self, df: DataFrame, n: int, edit_points: list[float], edit_size: int
+    ) -> DataFrame:
         cond = None
         for p in edit_points:
             point = int(n * p)
@@ -177,7 +184,16 @@ class DataGenerator:
     ) -> DataFrame:
         """Splice ``edit_size`` fresh rows at each edit point (fractional
         ``_pos`` places them between existing rows)."""
-        n = df.count()
+        return self._insert_rows(df, df.count(), spark, edit_points, edit_size)
+
+    def _insert_rows(
+        self,
+        df: DataFrame,
+        n: int,
+        spark: SparkSession,
+        edit_points: list[float],
+        edit_size: int,
+    ) -> DataFrame:
         out = df
         for i, p in enumerate(edit_points):
             point = int(n * p)
@@ -192,7 +208,11 @@ class DataGenerator:
         return out
 
     def append_rows(self, df: DataFrame, spark: SparkSession, ratio: float) -> DataFrame:
-        n = df.count()
+        return self._append_rows(df, df.count(), spark, ratio)
+
+    def _append_rows(
+        self, df: DataFrame, n: int, spark: SparkSession, ratio: float
+    ) -> DataFrame:
         extra = self.generate_table(
             spark, int(ratio * n), id_offset=90_000_000, pos_offset=float(n)
         )
@@ -207,21 +227,26 @@ class DataGenerator:
         (i+1)·edit_size-1 (de/synthetic.py:47) — replicated via the draw
         index within the fresh id stream.
         """
-        n = df.count()
-        replacements = []
-        for i, p in enumerate(edit_points):
-            point = int(n * p)
+        return self._update_rows(df, df.count(), spark, edit_points, edit_size)
+
+    def _update_rows(
+        self,
+        df: DataFrame,
+        n: int,
+        spark: SparkSession,
+        edit_points: list[float],
+        edit_size: int,
+    ) -> DataFrame:
+        points = [int(n * p) for p in edit_points]
+        out = df.filter(~F.col(POS).isin([float(pt) for pt in points]))
+        for i, point in enumerate(points):
             fresh = self.generate_table(
                 spark,
                 edit_size * len(edit_points),
                 id_offset=70_000_000,
                 pos_offset=0.0,
             ).filter(F.col(POS) == float((i + 1) * edit_size - 1))
-            replacements.append((point, fresh.withColumn(POS, F.lit(float(point)))))
-        points = [int(n * p) for p in edit_points]
-        out = df.filter(~F.col(POS).isin([float(pt) for pt in points]))
-        for _, fresh in replacements:
-            out = out.unionByName(fresh)
+            out = out.unionByName(fresh.withColumn(POS, F.lit(float(point))))
         return out
 
     def update_column(self, df: DataFrame, updated: DataFrame, column: str) -> DataFrame:
@@ -241,14 +266,17 @@ class DataGenerator:
         update_columns: list[str] | None = None,
         edit_size: int = 10,
     ) -> dict[str, DataFrame]:
-        """G7 bundle (de/synthetic.py:52-84): original + edited variants."""
+        """G7 bundle (de/synthetic.py:52-84): original + edited variants.
+
+        Lazy and job-free: ``original`` has exactly ``size`` rows, so every
+        edit point derives from ``size`` instead of a count of it."""
         original = self.generate_table(spark, size)
-        updated = self.update_rows(original, spark, edit_points, edit_size)
+        updated = self._update_rows(original, size, spark, edit_points, edit_size)
         out = {
             "original": original,
-            "deleted": self.delete_rows(original, edit_points, edit_size),
-            "inserted": self.insert_rows(original, spark, edit_points, edit_size),
-            "appended": self.append_rows(original, spark, append_ratio),
+            "deleted": self._delete_rows(original, size, edit_points, edit_size),
+            "inserted": self._insert_rows(original, size, spark, edit_points, edit_size),
+            "appended": self._append_rows(original, size, spark, append_ratio),
             "updated": updated,
         }
         for col in update_columns or []:

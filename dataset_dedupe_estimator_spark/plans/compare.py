@@ -12,15 +12,27 @@ work is a distributed job instead of a local pyarrow call).
 compare_formats: parameter-impact study — write a baseline + N contenders
 of the same table; estimate each [baseline, contender] pair
 (de/estimate.py:87-119, sweep de/cli.py:324-349).
+
+Each member is computed once. A DataFrame member is usually a lazy,
+Python-generated plan, and every format's write and sanity counts would
+otherwise recompute its whole lineage. So each distinct DataFrame member
+(by object identity) that is written more than once and is not already
+persisted is persisted and materialized before the write fan-out, and
+unpersisted once the writes are done — the reference writes every format
+from one in-memory pyarrow table. Path members are read by each writer.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from collections import Counter
+from collections.abc import Iterable, Iterator
+from concurrent.futures import Executor, ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 from pathlib import Path
 from typing import Union
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from dataset_dedupe_estimator_spark.operators.chunker import ChunkerParams
@@ -47,7 +59,10 @@ class EstimationResult:
     # a per-writer LOWER BOUND, comparable across formats only within a
     # single run's fixed contender set (the reference's tqdm it/s is the
     # sequential analogue; run max_workers=1 for directly comparable
-    # numbers).
+    # numbers). A member written more than once is materialized before
+    # the timed writes, so its write time excludes member generation, as
+    # the reference's writes from an in-memory table do; a member written
+    # only once is still generated inside its write.
     write_seconds: float = 0.0
     write_files_per_s: float = 0.0
 
@@ -72,6 +87,33 @@ def _estimate_group(
         xet_bytes=res.get("xet_bytes", 0),
         xet_dedup_ratio=res.get("xet_dedup_ratio", 0.0),
     )
+
+
+def _map_all(pool: Executor, fn, items) -> list:
+    """``pool.map`` that lets every call finish before it raises the first
+    error, so no call still runs once the caller moves on."""
+    futures = [pool.submit(fn, x) for x in items]
+    wait(futures)
+    return [f.result() for f in futures]
+
+
+@contextmanager
+def _computed_once(writes: Iterable[Source], pool: Executor) -> Iterator[None]:
+    """Persist and materialize each DataFrame in ``writes`` (one entry per
+    write) that is written more than once and not already persisted;
+    unpersist exactly those on exit."""
+    frames = [src for src in writes if isinstance(src, DataFrame)]
+    n_writes = Counter(map(id, frames))
+    persisted: list[DataFrame] = []
+    try:
+        for key, df in {id(df): df for df in frames}.items():
+            if n_writes[key] > 1 and df.storageLevel == StorageLevel.NONE:
+                persisted.append(df.persist())
+        _map_all(pool, DataFrame.count, persisted)
+        yield
+    finally:
+        for df in persisted:
+            df.unpersist()
 
 
 def compare_formats_tables(
@@ -105,9 +147,10 @@ def compare_formats_tables(
             path = fmt.write(spark, name, src, out_dir)
             return (group, label), str(path), _time.perf_counter() - t0
 
-        for key, path, wall in pool.map(do_write, write_jobs):
-            written.setdefault(key, []).append(path)
-            write_walls[key] = write_walls.get(key, 0.0) + wall
+        with _computed_once([job[4] for job in write_jobs], pool):
+            for key, path, wall in _map_all(pool, do_write, write_jobs):
+                written.setdefault(key, []).append(path)
+                write_walls[key] = write_walls.get(key, 0.0) + wall
 
         futures = [
             pool.submit(
@@ -143,7 +186,6 @@ def compare_formats(
     """O2 (de/estimate.py:87-119): estimate [baseline, contender] pairs —
     how much of the baseline file a re-encode can still dedup against."""
     directory = Path(directory)
-    base_path = str(baseline.write(spark, "baseline", table, directory))
 
     def run(fmt: FileFormat) -> EstimationResult:
         label = fmt.paramstem(fmt.name)
@@ -159,8 +201,12 @@ def compare_formats(
             group="param-impact",
         )
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        return list(pool.map(run, contenders))
+    with (
+        ThreadPoolExecutor(max_workers=max_workers) as pool,
+        _computed_once([table] * (1 + len(contenders)), pool),
+    ):
+        base_path = str(baseline.write(spark, "baseline", table, directory))
+        return _map_all(pool, run, contenders)
 
 
 def results_df(spark: SparkSession, results: list[EstimationResult]) -> DataFrame:

@@ -363,7 +363,7 @@ def _lsh_features_fn(it):
         offsets = pa.array(np.arange(0, (nb + 1) * DIM, DIM, dtype=np.int32))
         arrays = [vec_id, pa.ListArray.from_arrays(offsets, pa.array(unit.ravel()))]
         # r14 (§4.2): plane dots via ONE BLAS GEMM with a sign guard,
-        # replacing the 128-pass strict-left-fold accumulation loop
+        # replacing the 64-pass (one per DIM) strict-left-fold accumulation loop
         # (5-14x in the kernel microbench at 2k-100k-row batches — the
         # loop re-streams the (nb, T*P) accumulator from DRAM per dim).
         # The dot VALUES feed only the `>= 0.0` sign test below, and the
@@ -378,12 +378,16 @@ def _lsh_features_fn(it):
         # with the verbatim left fold, so its sign (and the >= 0.0 tie,
         # where -0.0 >= 0.0 is also True) comes from the fold bits; all
         # other entries satisfy |gemm - fold| <= tol < |gemm|, hence
-        # sign(gemm) == sign(fold). Pinned by
-        # test_lsh_features_match_fold_expressions and the near-zero
-        # adversarial test_guarded_gemm_sign_matches_fold.
+        # sign(gemm) == sign(fold). A non-finite gemm entry (overflowing
+        # products summed in another order can give NaN where the fold
+        # gives inf, and NaN <= tol is False) also takes the fold. Pinned
+        # by test_lsh_features_match_fold_expressions, the near-zero
+        # adversarial test_guarded_gemm_sign_matches_fold and
+        # test_guarded_gemm_non_finite_takes_fold.
         dots = e @ PFT
         amax = np.abs(e) @ PFT_ABS
         near = np.abs(dots) <= GUARD_TOL * amax
+        near |= ~np.isfinite(dots)
         if near.any():
             r, c = np.nonzero(near)
             acc = np.zeros(len(r))

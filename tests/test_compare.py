@@ -2,7 +2,10 @@
 (format, group), field presence, output paths, numfiles, ratio in (0,1],
 identical-members group ⇒ ratio ≈ 1/numfiles; display helpers."""
 
+from dataclasses import dataclass, field
+
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from dataset_dedupe_estimator_spark.operators.synthetic import DataGenerator, finalize
@@ -61,6 +64,7 @@ def test_compare_formats_param_impact(spark, variant_groups, tmp_path):
     results = compare_formats(
         spark, ParquetFormat(), contenders, table, tmp_path / "pi"
     )
+    assert table.storageLevel != StorageLevel.NONE  # the caller's cache stays
     assert len(results) == 3
     for r in results:
         assert r.numfiles == 2
@@ -84,3 +88,80 @@ def test_display_helpers(spark, variant_groups, tmp_path):
     assert "edit-deleted" in grid.columns and "identical" in grid.columns
     report = markdown_report(spark, df)
     assert "### identical" in report and "**" in report
+
+
+@dataclass(frozen=True)
+class _LevelProbe(JsonLinesFormat):
+    """JSONL writer that records each member's storage level as it writes."""
+
+    name: str = "probe"
+    seen: list = field(default_factory=list, compare=False, hash=False)
+
+    def write(self, spark, stem, src, directory):
+        self.seen.append((stem, src.storageLevel))
+        return super().write(spark, stem, src, directory)
+
+
+@dataclass(frozen=True)
+class _FailingFormat(ParquetFormat):
+    """A writer that is not available, as CdcParquetFormat on a pyarrow
+    without content-defined chunking."""
+
+    name: str = "failing"
+
+    def write(self, spark, stem, src, directory):
+        raise NotImplementedError("writer unavailable")
+
+
+def _members(spark):
+    gen = DataGenerator({"a": "int", "b": "str", "t": ["str"]}, seed=5)
+    tables = gen.generate_synthetic_tables(spark, 600, [0.5], edit_size=10)
+    shared = finalize(tables["original"])
+    deleted = finalize(tables["deleted"])
+    cached = finalize(tables["appended"]).cache()
+    groups = {
+        "g1": {"original": shared, "deleted": deleted},
+        "g2": {"original": shared, "appended": cached},
+    }
+    return shared, deleted, cached, groups
+
+
+def test_compare_writes_match_direct_writes_and_clean_up(spark, tmp_path):
+    """Each DataFrame member is persisted once for the fan-out: every file
+    is byte-identical to a direct write of the member, the members the
+    call persisted are unpersisted, and the caller's cache is kept."""
+    shared, deleted, cached, groups = _members(spark)
+    probe = _LevelProbe()
+    formats = [ParquetFormat(compression="zstd"), probe]
+    results = compare_formats_tables(spark, formats, groups, tmp_path / "cmp")
+    assert len(results) == len(formats) * len(groups)
+    assert probe.seen and all(level != StorageLevel.NONE for _, level in probe.seen)
+    assert shared.storageLevel == StorageLevel.NONE
+    assert deleted.storageLevel == StorageLevel.NONE
+    assert cached.storageLevel != StorageLevel.NONE
+
+    written = sorted(p for p in (tmp_path / "cmp").rglob("*") if p.is_file())
+    assert len(written) == len(formats) * 4
+    for group, members in groups.items():
+        for fmt in formats:
+            label = fmt.paramstem(fmt.name)
+            for name, member in members.items():
+                direct = fmt.write(spark, name, member, tmp_path / "direct" / group / label)
+                got = tmp_path / "cmp" / direct.relative_to(tmp_path / "direct")
+                assert got.read_bytes() == direct.read_bytes(), got
+    cached.unpersist()
+
+
+def test_compare_unpersists_when_a_write_raises(spark, tmp_path):
+    shared, deleted, cached, groups = _members(spark)
+    formats = [ParquetFormat(compression="zstd"), _FailingFormat()]
+    with pytest.raises(NotImplementedError):
+        compare_formats_tables(spark, formats, groups, tmp_path)
+    assert shared.storageLevel == StorageLevel.NONE
+    assert deleted.storageLevel == StorageLevel.NONE
+    assert cached.storageLevel != StorageLevel.NONE
+    table = finalize(DataGenerator({"a": "int"}, seed=1).generate_table(spark, 50))
+    with pytest.raises(NotImplementedError):
+        compare_formats(spark, ParquetFormat(), [_FailingFormat()], table, tmp_path / "pi")
+    assert table.storageLevel == StorageLevel.NONE
+    cached.unpersist()

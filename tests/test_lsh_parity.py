@@ -1,7 +1,10 @@
 """The Arrow-batched LSH feature pass must be bit-identical to the
-declarative fold expressions (which the DuckDB oracle mirrors): same
-float64 products, same left-to-right addition order (np.cumsum), so the
-same sign bits and unit components."""
+declarative fold expressions (which the DuckDB oracle mirrors). The sign
+bits come from a guarded GEMM: any entry whose sign the GEMM's summation
+order could flip (near zero or non-finite) is recomputed with the
+verbatim left fold, so every bit matches the fold. The unit components
+(``nrm``/``unit``) use the fold's own left-to-right addition order
+(np.cumsum), so they match exactly too."""
 
 from pyspark.sql import functions as F
 
@@ -94,6 +97,54 @@ def test_guarded_gemm_sign_matches_fold():
         want = ["".join(want_chars[i, t, :]) for i in range(n)]
         assert got == want, f"table {t}"
     assert out.column(1).to_pylist()  # unit column present and non-empty
+
+
+def test_guarded_gemm_non_finite_takes_fold():
+    """Overflowing products: summed in the GEMM's order they can give NaN
+    where the strict left fold reaches +inf (bit '1'). NaN fails the
+    ``<=`` guard test, so the guard must also catch non-finite GEMM
+    entries and take the fold's sign."""
+    import numpy as np
+    import pyarrow as pa
+
+    from dataset_dedupe_estimator_spark.queries.similarity import (
+        DIM,
+        _PLANES,
+        _lsh_features_fn,
+    )
+
+    PF = np.asarray(_PLANES, dtype=np.float64).reshape(
+        N_TABLES * MAX_PLANES, DIM
+    )
+    rng = np.random.default_rng(1)
+    # products of magnitude up to ~1e308 with random signs, so partial
+    # sums overflow to +inf or -inf depending on the summation order. One
+    # row per batch: numpy then takes a matrix-vector BLAS call, whose
+    # order differs from the fold's (on OpenBLAS 0.3.23 it yields NaN
+    # where the fold gives +inf; a 64-row GEMM here does not)
+    rows = rng.choice([-1.0, 1.0], size=(64, DIM)) * 10.0 ** rng.uniform(
+        306, 308, size=(64, DIM)
+    )
+    off = pa.array(np.array([0, DIM], dtype=np.int32))
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array([i], type=pa.int64()), pa.ListArray.from_arrays(off, pa.array(v))],
+            names=["vec_id", "embedding"],
+        )
+        for i, v in enumerate(rows)
+    ]
+    with np.errstate(over="ignore", invalid="ignore"):
+        outs = list(_lsh_features_fn(iter(batches)))
+        ref = np.zeros((len(rows), N_TABLES * MAX_PLANES))
+        for d in range(DIM):
+            ref += rows[:, d, None] * PF[None, :, d]
+    assert np.isposinf(ref).any()  # the fold really reaches +inf
+    assert len(outs) == len(rows)
+    want_chars = np.where(ref >= 0.0, "1", "0").reshape(-1, N_TABLES, MAX_PLANES)
+    for i, out in enumerate(outs):
+        for t in range(N_TABLES):
+            got = out.column(out.schema.names.index(f"bits{t}")).to_pylist()
+            assert got == ["".join(want_chars[i, t, :])], f"row {i} table {t}"
 
 
 def test_plane_ladder_engages_past_2pow12(spark):

@@ -125,3 +125,44 @@ def test_insert_positions(spark, gen):
     # prefix and suffix unchanged; 3 fresh rows spliced at `point`
     assert rows[:point] == orig_rows[:point]
     assert rows[point + 3 :] == orig_rows[point:]
+
+
+def test_generate_synthetic_tables_runs_no_jobs(spark, gen):
+    """The bundle is lazy: every edit point derives from ``size``, so
+    building it launches no Spark job (no count of ``original``). A
+    sentinel job in the same group proves the tracker has caught up:
+    listener events arrive in order, so once the sentinel shows, any
+    earlier job of the group shows too."""
+    import time
+
+    sc = spark.sparkContext
+    group = "test-generate-synthetic-tables-no-jobs"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        gen.generate_synthetic_tables(
+            spark, N, EDIT_POINTS, append_ratio=0.05, update_columns=["a"], edit_size=10
+        )
+        sc.parallelize([0], 1).count()  # the sentinel: one RDD job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_public_edit_operators_count_their_input(spark, gen):
+    """The public operators still derive edit points from the frame they
+    are given, whatever its size."""
+    original = gen.generate_table(spark, N)
+    half = original.filter(F.col(POS) < N // 2)
+    n = N // 2
+    e, k = len(EDIT_POINTS), 5
+    assert gen.delete_rows(half, EDIT_POINTS, k).count() == n - e * k
+    assert gen.insert_rows(half, spark, EDIT_POINTS, k).count() == n + e * k
+    assert gen.append_rows(half, spark, 0.1).count() == n + int(0.1 * n)
+    updated = gen.update_rows(half, spark, EDIT_POINTS, k)
+    assert sorted(r[POS] for r in updated.collect()) == [float(i) for i in range(n)]
+    changed = {r[POS] for r in updated.subtract(half).collect()}
+    assert changed == {float(int(n * p)) for p in EDIT_POINTS}
